@@ -14,7 +14,7 @@ oracle for the LSH path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import SQL_TOKEN_PATTERN
@@ -92,14 +92,14 @@ def _bounded_groups(df: DataFrame, group_cols: list[str], item,
     )
 
 
-def _shingle_arrays(df: DataFrame, text_col: str = "text",
-                    n: int = 3) -> DataFrame:
-    """(doc_id, shs) — per-doc ARRAY of distinct lowercased token n-grams.
+def _shingle_set(df: DataFrame, text_col: str, n: int
+                 ) -> tuple[DataFrame, Column]:
+    """(doc_id, toks) projection plus the per-doc ARRAY of distinct
+    lowercased token n-grams over it — the one shingle construction
+    behind _shingle_arrays and _shingles.
 
     Token shingling via array ops (narrow); `sequence` + `slice` builds the
-    n-gram windows JVM-side without any UDF.  Kept as the un-exploded form
-    so callers needing per-doc shingle-set sizes read them as size(shs)
-    with ZERO extra passes/shuffles (ngram_jaccard_pairs).
+    n-gram windows JVM-side without any UDF.
 
     Structure notes (r06), both load-bearing:
 
@@ -121,16 +121,24 @@ def _shingle_arrays(df: DataFrame, text_col: str = "text",
     toks = F.expr(
         f"regexp_extract_all(lower({text_col}), '{SQL_TOKEN_PATTERN}', 0)"
     )
-    d = df.select("doc_id", toks.alias("toks"))
-    return d.select(
-        "doc_id",
-        F.expr(
-            f"array_distinct(transform("
-            f" slice(sequence(0, size(toks)), 1,"
-            f"       greatest(size(toks) - {n} + 1, 0)),"
-            f" i -> concat_ws(' ', slice(toks, i + 1, {n}))))"
-        ).alias("shs"),
+    shs = F.expr(
+        f"array_distinct(transform("
+        f" slice(sequence(0, size(toks)), 1,"
+        f"       greatest(size(toks) - {n} + 1, 0)),"
+        f" i -> concat_ws(' ', slice(toks, i + 1, {n}))))"
     )
+    return df.select("doc_id", toks.alias("toks")), shs
+
+
+def _shingle_arrays(df: DataFrame, text_col: str = "text",
+                    n: int = 3) -> DataFrame:
+    """(doc_id, shs) — per-doc ARRAY of distinct lowercased token n-grams.
+
+    Kept as the un-exploded form so callers needing per-doc shingle-set
+    sizes read them as size(shs) with ZERO extra passes/shuffles
+    (ngram_jaccard_pairs)."""
+    d, shs = _shingle_set(df, text_col, n)
+    return d.select("doc_id", shs.alias("shs"))
 
 
 def _shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -142,23 +150,9 @@ def _shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     whole shingle construction — tokenize regex inside the per-element
     slice() lambda included — into a scan-level filter (measured ~30x on
     minhash at sf1.0).  A non-cheap generator expression is skipped by
-    that rule (SPARK-36715).  Short-doc guard and projection structure:
-    see _shingle_arrays."""
-    toks = F.expr(
-        f"regexp_extract_all(lower({text_col}), '{SQL_TOKEN_PATTERN}', 0)"
-    )
-    d = df.select("doc_id", toks.alias("toks"))
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"array_distinct(transform("
-                f" slice(sequence(0, size(toks)), 1,"
-                f"       greatest(size(toks) - {n} + 1, 0)),"
-                f" i -> concat_ws(' ', slice(toks, i + 1, {n}))))"
-            )
-        ).alias("shingle"),
-    )
+    that rule (SPARK-36715)."""
+    d, shs = _shingle_set(df, text_col, n)
+    return d.select("doc_id", F.explode(shs).alias("shingle"))
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -215,7 +209,10 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
         # sizes 24.1 s vs r5 4-evaluation shape 25.8 s.  The size-ratio
         # prefilter is EXACT: jaccard <= min(sz)/max(sz), so pairs with
         # min < t*max can never pass the threshold and their instances
-        # are dropped before the aggregation (best 23.8 s).
+        # are dropped before the aggregation (best 23.8 s).  The final
+        # filter compares the ROUNDED jaccard, which reaches t from as low
+        # as t - 5e-7, so the prefilter bound gets 1e-6 of slack: it may
+        # keep a pair the final filter drops, never the reverse.
         a = sh.select(F.col("doc_id").alias("a"),
                       F.col("sz").alias("sz_a"), "shingle")
         b = sh.select(F.col("doc_id").alias("b"),
@@ -224,7 +221,8 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
             a.join(b, "shingle")
             .where((F.col("a") < F.col("b"))
                    & (F.least("sz_a", "sz_b")
-                      >= F.greatest("sz_a", "sz_b") * F.lit(threshold)))
+                      >= F.greatest("sz_a", "sz_b")
+                      * F.lit(threshold - 1e-6)))
             .groupBy("a", "b", "sz_a", "sz_b")
             .agg(F.count(F.lit(1)).alias("common"))
         )

@@ -35,15 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.oracle import MAX_CHAR_LEN, MAX_SEQ_LEN, encode_tokens, tokenize_text
+from .stats import collect_if_small
 
 ENCODED_SCHEMA = (
     "doc_id BIGINT, pos BIGINT, token STRING, word_id BIGINT,"
     " char_ids ARRAY<INT>"
 )
-
-# above this many vocab rows the dicts stop fitting a sane task closure
-# (~100 MB at 50 B/entry) and the join path takes over
-CLOSURE_VOCAB_MAX = 2_000_000
 
 
 def encode_corpus_arrow(docs: DataFrame, word_vocab: dict[str, int],
@@ -161,16 +158,15 @@ def encode_corpus_join(docs: DataFrame, word_vocab: DataFrame,
 
 def encode_corpus(docs: DataFrame, word_vocab: DataFrame,
                   char_vocab: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  closure_max: int = CLOSURE_VOCAB_MAX) -> DataFrame:
+                  text_col: str = "text", id_col: str = "doc_id"
+                  ) -> DataFrame:
     """Size-gated encode: collect the dicts into the one-crossing Arrow
-    closure while the vocab is reference-sized; switch to the relational
-    join path when it is not.  Both paths emit ENCODED_SCHEMA and agree
-    on ASCII corpora (parametrized test).  ONE capped collect both
-    decides the gate and supplies the closure dict (a separate count()
-    would execute the vocab-build lineage twice)."""
-    head = word_vocab.select("word", "id").limit(closure_max + 1).collect()
-    if len(head) <= closure_max:
+    closure while the vocab is within the driver gate
+    (stats.collect_if_small); switch to the relational join path when it
+    is not.  Both paths emit ENCODED_SCHEMA and agree on ASCII corpora
+    (parametrized test)."""
+    head = collect_if_small(word_vocab.select("word", "id"))
+    if head is not None:
         wv = {"<PAD>": 0, "<UNK>": 1, "<NUM>": 2}
         wv.update({r["word"]: int(r["id"]) for r in head})
         cv = {"<PAD>": 0, "<UNK>": 1}

@@ -1,7 +1,7 @@
 """Mention detection: tokenize -> BIO tag -> span merge (SURVEY.md W1).
 
 Reference semantics: app.py:210-214 (tokenize), app.py:335-416 (span merge
-with orphan-I promotion + trailing flush).  Three implementations, all
+with orphan-I promotion + trailing flush).  Two Spark implementations,
 verified to produce identical mention sets (tests + 114k-mention agreement
 at sf0.1):
 
@@ -9,18 +9,14 @@ at sf0.1):
    (narrow map-literal lookups), then posexplode -> running-sum window ->
    groupBy (doc_id, span_id).  Window and groupBy both cluster on doc_id so
    Catalyst plans exactly ONE exchange; everything is whole-stage codegen.
-   Measured fastest (12s vs 19s arrow vs 192s HOF at sf0.1/local[8]).
+   Measured fastest (12s vs 19s arrow at sf0.1/local[8]).
 
 2. **`extract_mentions_arrow` (exact-parity path)**: fused mapInPandas
    running the *exact* Python-re tokenizer + shared tagger + transcribed
    span merge from ``core.oracle`` per document — one JVM->Python crossing
-   for the whole stage; ZERO shuffles.  Used where Python-exact semantics
-   are load-bearing (arbitrary-unicode content in the KG pipeline).
-
-3. **`mentions_hof` (fold form)**: zero-shuffle single-expression
-   aggregate() fold.  Kept as a cross-paradigm correctness check only:
-   Spark evaluates higher-order functions interpreted (CodegenFallback),
-   ~ms/doc — 16x slower than the window form.
+   for the whole stage; ZERO shuffles, so it also runs on streams
+   (streaming/stream_kg.py).  Used where Python-exact semantics are
+   load-bearing (arbitrary-unicode content in the KG pipeline).
 
 Plus `bio_spans_window_sql`: the engine-portable SQL formulation used as
 the DuckDB oracle twin.
@@ -38,7 +34,7 @@ from ..functions.text import SQL_TOKEN_PATTERN
 from ..lexicon import tag_case_sql
 
 # ---------------------------------------------------------------------------
-# 1. Declarative, shuffle-free form
+# 1. JVM form: array-side tokenize + tag, window span merge
 # ---------------------------------------------------------------------------
 
 
@@ -98,90 +94,22 @@ def doc_tags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return doc_tokens(docs, text_col).withColumn("tags", tags_array("tokens"))
 
 
-MENTION_COLS = [
-    "text", "type", "tag", "individual_tags", "tokens",
-    "start_position", "end_position",
-]
-
-_SPAN_STRUCT_SQL = (
-    "STRUCT<text: STRING, type: STRING, tag: STRING,"
-    " individual_tags: ARRAY<STRING>, tokens: ARRAY<STRING>,"
-    " start_position: INT, end_position: INT>"
+# The BIO span-start rule (app.py:335-416) as a SQL predicate over the tag
+# array `tags` and a 0-based lambda index `i`: a token opens a mention when
+# it is B-, or an I- that does not continue the previous token's type (the
+# orphan-I promotion).  O never opens one.  `mentions` numbers spans by the
+# running sum of starts; stats.entity_type_counts_from_docs counts starts.
+# The CASE order keeps tags[i-1] from being read at i = 0 (ANSI mode
+# raises on an out-of-range index).
+SPAN_START_SQL = (
+    "CASE"
+    "  WHEN tags[i] = 'O' THEN false"
+    "  WHEN substr(tags[i], 1, 2) = 'B-' THEN true"
+    "  WHEN i = 0 THEN true"
+    "  WHEN tags[i-1] = 'O' THEN true"
+    "  WHEN substr(tags[i-1], 3) != substr(tags[i], 3) THEN true"
+    "  ELSE false END"
 )
-_CUR_STRUCT_SQL = "STRUCT<pos: INT, token: STRING, tag: STRING>"
-
-
-def _mk_span(cur: str) -> str:
-    """SQL constructing one D10 mention record from the open accumulator.
-
-    The opening tag is rewritten to B-<type> — this *is* the orphan-I
-    promotion of app.py:383 (cur[0].tag may be an I- tag)."""
-    return f"""named_struct(
-      'text', concat_ws(' ', transform({cur}, c -> c.token)),
-      'type', substr({cur}[0].tag, 3),
-      'tag', concat('B-', substr({cur}[0].tag, 3)),
-      'individual_tags', transform({cur}, c -> c.tag),
-      'tokens', transform({cur}, c -> c.token),
-      'start_position', {cur}[0].pos,
-      'end_position', {cur}[size({cur})-1].pos)"""
-
-
-# One-pass BIO decode as an aggregate() fold over (pos, token, tag) structs.
-# Semantics of app.py:335-416: B- always opens (flushing any open span);
-# I- continues iff the open span has the same type, else flushes and opens
-# with promotion; O flushes; trailing open span flushed by the finish lambda.
-# A single linear expression: no cross-referencing columns, so Catalyst's
-# projection collapse cannot duplicate subtrees (the naive multi-column
-# formulation compiled in minutes; this compiles in milliseconds).
-_SPANS_FOLD_EXPR = f"""aggregate(
-  transform(tokens, (tok, i) ->
-    named_struct('pos', i, 'token', tok, 'tag', tags[i])),
-  named_struct(
-    'spans', cast(array() as ARRAY<{_SPAN_STRUCT_SQL}>),
-    'cur',   cast(array() as ARRAY<{_CUR_STRUCT_SQL}>)),
-  (acc, e) -> CASE
-    WHEN e.tag = 'O' THEN named_struct(
-      'spans', CASE WHEN size(acc.cur) > 0
-                    THEN array_append(acc.spans, {_mk_span("acc.cur")})
-                    ELSE acc.spans END,
-      'cur', cast(array() as ARRAY<{_CUR_STRUCT_SQL}>))
-    WHEN substr(e.tag, 1, 2) = 'B-'
-         OR size(acc.cur) = 0
-         OR substr(acc.cur[0].tag, 3) != substr(e.tag, 3)
-    THEN named_struct(
-      'spans', CASE WHEN size(acc.cur) > 0
-                    THEN array_append(acc.spans, {_mk_span("acc.cur")})
-                    ELSE acc.spans END,
-      'cur', array(e))
-    ELSE named_struct('spans', acc.spans, 'cur', array_append(acc.cur, e))
-    END,
-  acc -> CASE WHEN size(acc.cur) > 0
-              THEN array_append(acc.spans, {_mk_span("acc.cur")})
-              ELSE acc.spans END)"""
-
-
-def spans_array(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """docs + `spans` column: ARRAY<mention-struct> per document, computed
-    in one narrow pass (tokenize -> tag -> fold), zero shuffles."""
-    return doc_tags(docs, text_col).withColumn("spans", F.expr(_SPANS_FOLD_EXPR))
-
-
-def mentions_hof(docs: DataFrame, text_col: str = "text",
-                 keep_cols: list[str] | None = None) -> DataFrame:
-    """Shuffle-free mention extraction (higher-order-function fold form).
-
-    Zero exchanges, but Spark evaluates HOFs interpreted (CodegenFallback),
-    costing ~ms/doc — use `mentions` (window form, whole-stage codegen) on
-    the hot path; this form survives as a cross-paradigm correctness check.
-
-    Output columns: keep_cols + the D10 field set (FIXTURES.md §4.3):
-    text, type, tag, individual_tags, tokens, start_position, end_position.
-    """
-    keep_cols = keep_cols if keep_cols is not None else ["doc_id"]
-    d = spans_array(docs, text_col)
-    return d.select(*keep_cols, F.explode("spans").alias("m")).select(
-        *keep_cols, "m.*"
-    )
 
 
 def bio_tags_exploded(docs: DataFrame, text_col: str = "text",
@@ -207,8 +135,7 @@ def mentions(docs: DataFrame, text_col: str = "text",
     sequential span merge becomes: posexplode -> running-sum-of-starts
     window -> groupBy (doc_id, span_id).  The window and the groupBy both
     cluster on doc_id, so Catalyst plans exactly ONE exchange; every
-    operator is whole-stage-codegen (no interpreted higher-order funcs on
-    the hot path, unlike the `mentions` fold form).
+    operator is whole-stage-codegen.
     """
     keep_cols = keep_cols if keep_cols is not None else ["doc_id"]
     d = doc_tags(docs, text_col)
@@ -218,13 +145,7 @@ def mentions(docs: DataFrame, text_col: str = "text",
             "transform(tokens, (tok, i) -> named_struct("
             "'token', tok, 'tag', tags[i],"
             # span-start flag computed array-side too: no lag() needed
-            "'is_start', CASE"
-            "  WHEN tags[i] = 'O' THEN 0"
-            "  WHEN substr(tags[i], 1, 2) = 'B-' THEN 1"
-            "  WHEN i = 0 THEN 1"
-            "  WHEN tags[i-1] = 'O' THEN 1"
-            "  WHEN substr(tags[i-1], 3) != substr(tags[i], 3) THEN 1"
-            "  ELSE 0 END))"
+            f"'is_start', CAST({SPAN_START_SQL} AS INT)))"
         )).alias("pos", "e"),
     ).select(*keep_cols, "pos", "e.token", "e.tag", "e.is_start")
     from pyspark.sql.window import Window

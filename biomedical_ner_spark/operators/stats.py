@@ -13,13 +13,21 @@ from pyspark.sql import functions as F
 from ..lexicon import entity_name_case_sql
 from .splits import _bucketed_rank
 
-# Same driver-closure posture as encode.CLOSURE_VOCAB_MAX: below this many
-# dim rows the dense-id rank is assigned on the driver from ONE collected
-# aggregation; above it the two-pass bucket-offset rank takes over (the
-# offsets job re-evaluates the count lineage, but nothing vocabulary-sized
-# ever reaches the driver).  The engine already collects the vocab at this
-# size for the encode closure, so the gate adds no new driver exposure.
-DRIVER_RANK_MAX = 2_000_000
+# Driver-size gate, shared by the dense-id ranks below and the encode
+# closure (encode.encode_corpus): a dim of at most this many rows is
+# collected to the driver (~100 MB at 50 B/row); a larger one stays
+# distributed (the bucket-offset rank, the encode join path), so nothing
+# vocabulary-sized reaches the driver or a task closure.
+DRIVER_COLLECT_MAX = 2_000_000
+
+
+def collect_if_small(df: DataFrame):
+    """The rows of ``df`` if there are at most DRIVER_COLLECT_MAX of them,
+    else None.  ONE capped collect both decides the gate and supplies the
+    rows, so below the gate the lineage is evaluated exactly once (a
+    separate count() would evaluate it twice)."""
+    rows = df.limit(DRIVER_COLLECT_MAX + 1).collect()
+    return rows if len(rows) <= DRIVER_COLLECT_MAX else None
 
 
 def _driver_ranked_ids(spark, rows, sort_key, schema, id_from: int):
@@ -44,8 +52,8 @@ def entity_type_counts(mentions_df: DataFrame) -> DataFrame:
 def entity_type_counts_from_docs(docs: DataFrame,
                                  text_col: str = "text") -> DataFrame:
     """A4 computed WITHOUT materializing mention rows: every mention
-    corresponds to exactly one span-START token (the same is_start rule
-    spans.mentions feeds its running-sum window), and the mention's type
+    corresponds to exactly one span-START token (spans.SPAN_START_SQL, the
+    rule spans.mentions feeds its running-sum window), and the mention's type
     is that token's tag type — so the histogram is explode(start types) +
     one partially-aggregated groupBy.  Removes the doc_id exchange +
     window + per-span groupBy of the full token stream that the
@@ -56,17 +64,12 @@ def entity_type_counts_from_docs(docs: DataFrame,
     mention groups (doc_id, span_id) are in bijection with is_start
     tokens, and substr(elems[0].tag, 3) IS the start token's type
     (asserted by tests against the window path)."""
-    from .spans import doc_tags
+    from .spans import SPAN_START_SQL, doc_tags
 
     d = doc_tags(docs, text_col)
     starts = d.select(F.explode(F.expr(
-        "filter(transform(tags, (t, i) -> CASE"
-        "  WHEN t = 'O' THEN NULL"
-        "  WHEN substr(t, 1, 2) = 'B-' THEN substr(t, 3)"
-        "  WHEN i = 0 THEN substr(t, 3)"
-        "  WHEN tags[i-1] = 'O' THEN substr(t, 3)"
-        "  WHEN substr(tags[i-1], 3) != substr(t, 3) THEN substr(t, 3)"
-        "  ELSE NULL END), x -> x IS NOT NULL)")).alias("type"))
+        f"transform(filter(tags, (t, i) -> {SPAN_START_SQL}),"
+        " t -> substr(t, 3))")).alias("type"))
     return (
         starts
         .select(F.expr(entity_name_case_sql("type")).alias("entity_type"))
@@ -131,12 +134,11 @@ def vocab_build(tokens_df: DataFrame, min_freq: int = 2) -> DataFrame:
     )
     # size-gated rank (r06): the bucket-offset path evaluates the count
     # lineage twice (offsets job + ranked job — recomputation is its
-    # no-persist contract).  Below the driver-closure gate the single
-    # capped collect both decides the gate and supplies the rows, so the
-    # token stream is aggregated exactly once; ids are identical by the
-    # same (freq desc, word asc) order.
-    head = counted.limit(DRIVER_RANK_MAX + 1).collect()
-    if len(head) <= DRIVER_RANK_MAX:
+    # no-persist contract).  Below the driver gate the token stream is
+    # aggregated exactly once; ids are identical by the same
+    # (freq desc, word asc) order.
+    head = collect_if_small(counted)
+    if head is not None:
         return _driver_ranked_ids(
             tokens_df.sparkSession,
             [(r["word"], r["freq"]) for r in head],
@@ -162,8 +164,8 @@ def char_inventory(tokens_df: DataFrame) -> DataFrame:
     )
     # universe is bounded (alphabet): one collect instead of the two-pass
     # rank's double evaluation of the distinct over the token stream
-    head = chars.limit(DRIVER_RANK_MAX + 1).collect()
-    if len(head) <= DRIVER_RANK_MAX:
+    head = collect_if_small(chars)
+    if head is not None:
         return _driver_ranked_ids(
             tokens_df.sparkSession, [(r["ch"],) for r in head],
             lambda r: r[0], "ch STRING, id INT", id_from=2)
@@ -176,8 +178,8 @@ def tag_map(tags_df: DataFrame) -> DataFrame:
     """A3 — distinct tags sorted, ids from 1 after <PAD>=0
     (utils/creation_vocabulaire.py:169-174)."""
     tags = tags_df.select("tag").distinct()
-    head = tags.limit(DRIVER_RANK_MAX + 1).collect()
-    if len(head) <= DRIVER_RANK_MAX:
+    head = collect_if_small(tags)
+    if head is not None:
         return _driver_ranked_ids(
             tags_df.sparkSession, [(r["tag"],) for r in head],
             lambda r: r[0], "tag STRING, id INT", id_from=1)

@@ -29,7 +29,7 @@ from ..operators import spans
 from ..operators.canonicalize import canonical_entities, salted_counts
 from ..operators.linking import link_mentions
 from ..operators.triples import triples as make_triples
-from ..sources.repos import with_content_sha
+from ..sources.repos import repo_doc_id, with_content_sha
 from . import manifest as mf
 
 STAGES = ("mentions", "linked", "graph")
@@ -105,28 +105,17 @@ def prepare_input(repos: DataFrame, n_buckets: int,
     every field unambiguously and keeps NULL distinct from '' — the
     collision guard holds for arbitrary key values.
 
-    The 64-bit branch needs its own NULL handling: Spark's xxhash64
-    SKIPS null children entirely (the running hash passes through), so
-    (NULL, 'x', c) and ('x', NULL, c) would otherwise hash identically.
-    Each field is coalesced to a control-byte sentinel — non-NULL rows
-    hash exactly as before (recorded e2e outputs stay byte-stable), and
-    NULL-position swaps now differ because the sentinel is hashed in the
-    null slot.  A real field VALUE equal to the sentinel still collides
-    with NULL; a path/repo/commit containing \x00 bytes is outside any
-    sane input contract, and wide_ids=True has no such caveat at all.
-    (The bucket key keeps raw xxhash64: bucket collisions are by-design
-    harmless — pmod(n_buckets) collapses everything anyway.)"""
+    The 64-bit branch needs its own NULL handling, shared with the
+    stream: sources.repos.repo_doc_id.  (The bucket key keeps raw
+    xxhash64: bucket collisions are by-design harmless — pmod(n_buckets)
+    collapses everything anyway.)"""
     r = with_content_sha(repos)
     if wide_ids:
         doc_id = F.md5(F.to_json(
             F.struct("repo", "path", "commit"),
             {"ignoreNullFields": "false"}))
     else:
-        null_s = "\x00<NULL>\x00"
-        doc_id = F.xxhash64(
-            F.coalesce("repo", F.lit(null_s)),
-            F.coalesce("path", F.lit(null_s)),
-            F.coalesce("commit", F.lit(null_s)))
+        doc_id = repo_doc_id()
     r = r.withColumn("doc_id", doc_id).withColumn(
         "bucket",
         F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(n_buckets)).cast("int"),

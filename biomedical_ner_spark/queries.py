@@ -410,7 +410,7 @@ def q_encoded_tokens(spark, sf_dir):
     # out of a persisted bio_tags_exploded frame (_tokens_only).
     tags = _tokens_only(spark, sf_dir).persist()
     # size-gated: dict closure at reference vocab sizes, dim-frame joins
-    # beyond CLOSURE_VOCAB_MAX (nothing vocabulary-sized on the driver)
+    # beyond stats.DRIVER_COLLECT_MAX (nothing vocabulary-sized on the driver)
     enc = encode_corpus(_docs(spark, sf_dir), stats.vocab_build(tags),
                         stats.char_inventory(tags))
     # driver-compare convention: scalar columns only — arrays stay in the

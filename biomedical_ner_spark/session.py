@@ -68,6 +68,11 @@ def get_spark(
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
+    # Python workers (Arrow UDFs) import this package too; hand them its
+    # parent directory so a driver started outside the checkout works
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    b = b.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH")) if p))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

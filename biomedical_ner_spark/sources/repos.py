@@ -16,7 +16,7 @@ from __future__ import annotations
 import hashlib
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 REPO_SCHEMA = "repo STRING, path STRING, commit STRING, lang STRING, content STRING"
@@ -25,6 +25,24 @@ REPO_SCHEMA = "repo STRING, path STRING, commit STRING, lang STRING, content STR
 def with_content_sha(df: DataFrame, content_col: str = "content") -> DataFrame:
     """P14: the invariant column that must survive the pipeline unchanged."""
     return df.withColumn("content_sha", F.sha2(F.col(content_col), 256))
+
+
+def repo_doc_id() -> Column:
+    """The 64-bit doc_id of a (repo, path, commit) row — one rule for the
+    batch pipeline (plans.kg_pipeline.prepare_input) and the stream
+    (streaming.stream_kg).
+
+    Spark's xxhash64 SKIPS null children entirely (the running hash passes
+    through), so raw (NULL, 'x', c) and ('x', NULL, c) would hash
+    identically.  Each field is coalesced to a control-byte sentinel —
+    non-NULL rows hash exactly as raw xxhash64 does (recorded e2e outputs
+    stay byte-stable), and NULL-position swaps differ because the sentinel
+    is hashed in the null slot.  A real field VALUE equal to the sentinel
+    still collides with NULL; a path/repo/commit containing \\x00 bytes is
+    outside any sane input contract, and prepare_input(wide_ids=True) has
+    no such caveat at all."""
+    return F.xxhash64(*(F.coalesce(c, F.lit("\x00<NULL>\x00"))
+                        for c in ("repo", "path", "commit")))
 
 
 def repos_from_documents(docs: DataFrame) -> DataFrame:

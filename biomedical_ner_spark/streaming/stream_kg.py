@@ -3,18 +3,17 @@
 The reference is strictly request/response (one text per Streamlit click,
 app.py:728-757) — no watermarks or stateful semantics are required.  This
 module exists so the same extraction logic runs incrementally over an
-arriving file stream: readStream -> mention extraction (the identical
-narrow-stage operators) -> foreachBatch(kg micro-batch) with per-batch
-manifest rows, which is the streaming twin of the resumable batch pipeline.
+arriving file stream: readStream -> mention extraction (the batch
+pipeline's Arrow stage, spans.extract_mentions_arrow) -> file sink with a
+checkpoint, the streaming twin of the resumable batch pipeline.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..operators import spans
-from ..sources.repos import REPO_SCHEMA, with_content_sha
+from ..sources.repos import REPO_SCHEMA, repo_doc_id, with_content_sha
 
 
 def stream_mentions(spark: SparkSession, input_dir: str,
@@ -23,10 +22,10 @@ def stream_mentions(spark: SparkSession, input_dir: str,
                     max_files_per_trigger: int | None = None):
     """File-source stream of repo-shaped parquet -> mentions sink.
 
-    Extraction is the same narrow window-free stage used in batch
-    (doc_tags + span fold are per-row; the per-doc window/groupBy of the
-    default batch path is replaced by the fold form because streaming
-    aggregations would otherwise need an update-mode sink).
+    Extraction is the batch KG pipeline's stage: doc_id from the shared
+    64-bit rule (sources.repos.repo_doc_id), then the fused mapInPandas
+    extraction, which is per-row (no window or groupBy), so the stream
+    needs no stateful operator and appends to the sink.
 
     ``max_files_per_trigger`` bounds each microbatch to N source files —
     with availableNow this drains the backlog in multiple real
@@ -35,12 +34,10 @@ def stream_mentions(spark: SparkSession, input_dir: str,
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = reader.parquet(input_dir)
-    src = with_content_sha(src).withColumn(
-        "doc_id", F.xxhash64("repo", "path", "commit")
-    )
-    m = spans.mentions_hof(
-        src, text_col="content",
-        keep_cols=["doc_id", "repo", "path", "commit", "content_sha"],
+    src = with_content_sha(src).withColumn("doc_id", repo_doc_id())
+    m = spans.extract_mentions_arrow(
+        src, text_col="content", id_col="doc_id", sha_col="content_sha",
+        keep_cols=["repo", "path", "commit"],
     )
     writer = (
         m.writeStream.format("parquet")

@@ -147,10 +147,11 @@ def test_build_embedding_matrix_subword_oov(spark):
         build_embedding_matrix(vocab, vecs, spark, dim=8, oov="bogus")
 
 
-def test_encode_corpus_closure_and_join_paths_agree(spark):
+def test_encode_corpus_closure_and_join_paths_agree(spark, monkeypatch):
     """F-gate: the dict-closure Arrow path and the dim-frame join path
     must emit identical rows (word ids with NUM/UNK rules, ordered 20-char
     char ids); encode_corpus routes by vocab size."""
+    from biomedical_ner_spark.operators import stats
     from biomedical_ner_spark.operators.encode import (
         encode_corpus,
         encode_corpus_join,
@@ -179,7 +180,8 @@ def test_encode_corpus_closure_and_join_paths_agree(spark):
 
     closure = rows(encode_corpus(docs, wv, cv))           # under gate
     join = rows(encode_corpus_join(docs, wv, cv))
-    forced_join = rows(encode_corpus(docs, wv, cv, closure_max=0))
+    monkeypatch.setattr(stats, "DRIVER_COLLECT_MAX", 0)  # past the gate
+    forced_join = rows(encode_corpus(docs, wv, cv))
     assert closure == join == forced_join
     by_tok = {(d, p): (t, w, c) for d, p, t, w, c in closure}
     assert by_tok[(1, 2)][1] == 2       # '123' -> <NUM>

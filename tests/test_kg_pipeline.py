@@ -220,6 +220,36 @@ def test_py_files_packaging_and_spark_submit(tmp_path):
     assert summary["kg_job"] == "ok" and len(summary) > 1, summary
 
 
+def test_arrow_query_from_outside_checkout(tmp_path):
+    """A driver started outside the checkout (cwd elsewhere, no
+    PYTHONPATH) must still run Arrow UDFs: get_spark hands the package
+    path to the Python workers, which would otherwise fail to import it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from biomedical_ner_spark.operators.spans import"
+        " extract_mentions_arrow\n"
+        "from biomedical_ner_spark.session import get_spark\n"
+        "s = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "d = s.createDataFrame([(1, 'The BRCA1 gene')],"
+        " 'doc_id BIGINT, text STRING')\n"
+        "print('MENTIONS', [r.text for r in"
+        " extract_mentions_arrow(d).collect()])\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "-c", code, root],
+                         capture_output=True, text=True, timeout=300,
+                         cwd=str(tmp_path), env=env)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "MENTIONS ['BRCA1']" in out.stdout, out.stdout[-2000:]
+
+
 def test_wide_ids_pipeline_same_graph(spark, tmp_path_factory):
     """wide_ids=True (128-bit md5 doc ids — the 10^12-file collision
     guard) must produce the same mention/relation/entity counts as the

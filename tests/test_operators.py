@@ -446,11 +446,15 @@ def test_lsh_max_bucket_cap_drops_degenerate_buckets(spark):
     assert capped == {(100, 101)}
 
 
-def test_vocab_build_rank_property_random_corpora(spark):
-    """Property: vocab_build's bucket-offset dense ids must equal the
-    naive (freq desc, word asc) rank + 2 on random corpora with heavy
-    ties (the bucket function must be monotone in the order key)."""
+def test_vocab_build_rank_property_random_corpora(spark, monkeypatch):
+    """Property: vocab_build's dense ids must equal the naive
+    (freq desc, word asc) rank + 2 on random corpora with heavy ties, on
+    BOTH sides of the driver gate: the driver rank and the bucket-offset
+    rank (gate forced to 0; the bucket function must be monotone in the
+    order key).  char_inventory and tag_map ids must agree across the
+    gate too."""
     import random
+    from collections import Counter
 
     from biomedical_ner_spark.operators import stats
 
@@ -461,18 +465,31 @@ def test_vocab_build_rank_property_random_corpora(spark):
                 # agree through the bucket function (code-point order via
                 # UTF-8 byte order), incl. a surrogate-pair char
                 "β-gene", "émile", "ß", "中文", "ärm", "β", "𝛃x", "ﬁle"]
+    tagset = ["O", "B-DNA", "I-DNA", "B-RNA", "I-protein", "B-cell_line"]
+
+    def ids(df, key):
+        return {r[key]: r.id for r in df.collect()}
+
     for trial in range(3):
         toks = [rng.choice(alphabet) for _ in range(rng.randint(30, 120))]
-        df = spark.createDataFrame([(t,) for t in toks], "token STRING")
-        got = {r.word: r.id for r in stats.vocab_build(df).collect()}
-        from collections import Counter
-
+        tags = [rng.choice(tagset) for _ in toks]
+        df = spark.createDataFrame(list(zip(toks, tags)),
+                                   "token STRING, tag STRING")
         cnt = Counter(t.lower() for t in toks)
         want_rows = sorted(
             ((w, c) for w, c in cnt.items() if c >= 2),
             key=lambda wc: (-wc[1], wc[0]))
         want = {w: i + 3 for i, (w, _) in enumerate(want_rows)}
-        assert got == want, (trial, got, want)
+        want_tags = {t: i + 1 for i, t in enumerate(sorted(set(tags)))}
+        got = []
+        for gate in (stats.DRIVER_COLLECT_MAX, 0):
+            monkeypatch.setattr(stats, "DRIVER_COLLECT_MAX", gate)
+            got.append((ids(stats.vocab_build(df), "word"),
+                        ids(stats.char_inventory(df), "ch"),
+                        ids(stats.tag_map(df), "tag")))
+        assert got[0] == got[1], (trial, got)
+        assert got[0][0] == want, (trial, got[0][0], want)
+        assert got[0][2] == want_tags, (trial, got[0][2], want_tags)
 
 
 def test_encode_paths_agree_on_random_ascii_docs(spark):

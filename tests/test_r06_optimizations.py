@@ -50,17 +50,12 @@ def test_corpus_stats_from_docs_drops_zero_token_docs_like_explode(spark):
     assert rows == {"en": 1, "de": 1}
 
 
-def test_ngram_join_form_matches_bruteforce_python(spark, docs_small):
-    """The r06 self-join-with-sizes + size-ratio-prefilter form against a
-    literal Python set computation (threshold low enough that the ratio
-    prefilter is exercised)."""
+def _ngram_pairs_bruteforce(rows, threshold):
+    """Literal Python set computation of ngram_jaccard_pairs (n=3,
+    jaccard rounded to 6 dp before the threshold test)."""
     import re
 
-    from biomedical_ner_spark.operators import dedup
-
-    docs = docs_small.limit(60)
     pat = re.compile(r"[A-Za-z0-9_]+(?:-[A-Za-z0-9_]+)*|[^A-Za-z0-9_ \t\n\r]")
-    rows = docs.select("doc_id", "text").collect()
     sets = {}
     for r in rows:
         toks = pat.findall((r.text or "").lower())
@@ -75,11 +70,40 @@ def test_ngram_join_form_matches_bruteforce_python(spark, docs_small):
             if inter == 0:
                 continue
             j = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
-            if j >= 0.15:
+            if j >= threshold:
                 expect.add((a, b, j))
+    return expect
+
+
+def test_ngram_join_form_matches_bruteforce_python(spark, docs_small):
+    """The r06 self-join-with-sizes + size-ratio-prefilter form against a
+    literal Python set computation (threshold low enough that the ratio
+    prefilter is exercised)."""
+    from biomedical_ner_spark.operators import dedup
+
+    docs = docs_small.limit(60)
+    expect = _ngram_pairs_bruteforce(
+        docs.select("doc_id", "text").collect(), 0.15)
     got = {(r.a, r.b, r.jaccard) for r in
            dedup.ngram_jaccard_pairs(docs, threshold=0.15).collect()}
     assert got == expect
+
+
+def test_ngram_size_ratio_prefilter_keeps_rounded_threshold_pairs(spark):
+    """B's shingles are a strict subset of A's (|A| = 3, |B| = 2), so the
+    jaccard is 2/3, which rounds to 0.666667 >= t = 0.6666669.  The
+    size-ratio bound 2 >= 3 * t is false for the UNROUNDED t, so a
+    prefilter without slack drops the pair the final filter keeps."""
+    from biomedical_ner_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta")],
+        "doc_id BIGINT, text STRING")
+    t = 0.6666669
+    expect = _ngram_pairs_bruteforce(docs.collect(), t)
+    got = {(r.a, r.b, r.jaccard) for r in
+           dedup.ngram_jaccard_pairs(docs, threshold=t).collect()}
+    assert got == expect == {(1, 2, 0.666667)}
 
 
 def test_curate_documents_chained_minby_matches_join_form(spark):
@@ -152,13 +176,7 @@ def test_mentions_prefilter_matches_postfilter_window(spark, docs_small):
         F.posexplode(F.expr(
             "transform(tokens, (tok, i) -> named_struct("
             "'token', tok, 'tag', tags[i],"
-            "'is_start', CASE"
-            "  WHEN tags[i] = 'O' THEN 0"
-            "  WHEN substr(tags[i], 1, 2) = 'B-' THEN 1"
-            "  WHEN i = 0 THEN 1"
-            "  WHEN tags[i-1] = 'O' THEN 1"
-            "  WHEN substr(tags[i-1], 3) != substr(tags[i], 3) THEN 1"
-            "  ELSE 0 END))"
+            f"'is_start', CAST({spans.SPAN_START_SQL} AS INT)))"
         )).alias("pos", "e"),
     ).select("doc_id", "pos", "e.token", "e.tag", "e.is_start")
     w = (Window.partitionBy("doc_id").orderBy("pos")

@@ -61,9 +61,19 @@ def test_graph_tables_bucket_partitioned(spark, golden_docs, tmp_path):
 
 
 def test_streaming_extraction(spark, tmp_path):
+    from biomedical_ner_spark.sources.repos import (
+        REPO_SCHEMA,
+        repo_doc_id,
+        with_content_sha,
+    )
     from biomedical_ner_spark.streaming.stream_kg import stream_mentions
 
-    repos = synthesize_repos(spark, n_files=40, seed=7)
+    # plus a NULL-key row: xxhash64 skips NULL children, so only the shared
+    # sentinel rule gives it the same doc_id in the stream and in batch
+    null_key = spark.createDataFrame(
+        [(None, "null/key.txt", "c0ffee", "en",
+          "The BRCA1 gene is associated with breast cancer")], REPO_SCHEMA)
+    repos = synthesize_repos(spark, n_files=40, seed=7).unionByName(null_key)
     in_dir = str(tmp_path / "in")
     repos.write.parquet(in_dir)
     out_dir = str(tmp_path / "out")
@@ -71,20 +81,17 @@ def test_streaming_extraction(spark, tmp_path):
     q = stream_mentions(spark, in_dir, chk, out_dir)
     q.awaitTermination(120)
     got = spark.read.parquet(out_dir)
-    # streaming output equals the batch fold-form extraction
-    from biomedical_ner_spark.sources.repos import with_content_sha
-
-    src = with_content_sha(repos).withColumn(
-        "doc_id", F.xxhash64("repo", "path", "commit"))
+    # streaming output equals the batch extraction, doc_ids included
+    src = with_content_sha(repos).withColumn("doc_id", repo_doc_id())
     batch = spans.mentions(
         src, text_col="content",
         keep_cols=["doc_id", "repo", "path", "commit", "content_sha"],
     )
-    a = {tuple(r) for r in got.select("doc_id", "text", "type",
-                                      "start_position").collect()}
-    b = {tuple(r) for r in batch.select("doc_id", "text", "type",
-                                        "start_position").collect()}
+    cols = ["doc_id", "repo", "text", "type", "start_position"]
+    a = {tuple(r) for r in got.select(*cols).collect()}
+    b = {tuple(r) for r in batch.select(*cols).collect()}
     assert a == b and len(a) > 0
+    assert any(r[1] is None for r in a)
 
 
 def test_windowed_event_counts_watermark_semantics(spark, tmp_path):
