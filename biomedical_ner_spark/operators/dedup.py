@@ -199,52 +199,45 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
     sh = _shingle_arrays(docs, text_col, n).select(
         "doc_id", F.size("shs").alias("sz"),
         F.explode(F.expr("transform(shs, s -> s)")).alias("shingle"))
+    # inverted-index self-join (whole-stage-codegen pair stream), NOT a
+    # groupBy(shingle) + in-bucket combination expand: the pair stream
+    # here is ~50x the shingle stream (sum of df^2/2; 127M at sf1.0) and
+    # the expand's nested-transform lambdas are interpreted per pair
+    # struct — measured same-session r06 A/B (scripts/ab_ngram.py):
+    # group-expand 36.5 s vs self-join-with-sizes 24.1 s vs r5
+    # 4-evaluation shape 25.8 s.  The size-ratio prefilter is EXACT:
+    # jaccard <= min(sz)/max(sz), so pairs with min < t*max can never pass
+    # the threshold and their instances are dropped before the
+    # aggregation (best 23.8 s).  The final filter compares the ROUNDED
+    # jaccard, which reaches t from as low as t - 5e-7, so the prefilter
+    # bound gets 1e-6 of slack: it may keep a pair the final filter
+    # drops, never the reverse.
+    def pair_instances(s: DataFrame) -> DataFrame:
+        a = s.select(F.col("doc_id").alias("a"),
+                     F.col("sz").alias("sz_a"), "shingle")
+        b = s.select(F.col("doc_id").alias("b"),
+                     F.col("sz").alias("sz_b"), "shingle")
+        return a.join(b, "shingle").where(
+            (F.col("a") < F.col("b"))
+            & (F.least("sz_a", "sz_b")
+               >= F.greatest("sz_a", "sz_b") * F.lit(threshold - 1e-6)))
+
     if max_df is None:
-        # inverted-index self-join (whole-stage-codegen pair stream), NOT
-        # a groupBy(shingle) + in-bucket combination expand: the pair
-        # stream here is ~50x the shingle stream (sum of df^2/2; 127M at
-        # sf1.0) and the expand's nested-transform lambdas are
-        # interpreted per pair struct — measured same-session r06 A/B
-        # (scripts/ab_ngram.py): group-expand 36.5 s vs self-join-with-
-        # sizes 24.1 s vs r5 4-evaluation shape 25.8 s.  The size-ratio
-        # prefilter is EXACT: jaccard <= min(sz)/max(sz), so pairs with
-        # min < t*max can never pass the threshold and their instances
-        # are dropped before the aggregation (best 23.8 s).  The final
-        # filter compares the ROUNDED jaccard, which reaches t from as low
-        # as t - 5e-7, so the prefilter bound gets 1e-6 of slack: it may
-        # keep a pair the final filter drops, never the reverse.
-        a = sh.select(F.col("doc_id").alias("a"),
-                      F.col("sz").alias("sz_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("b"),
-                      F.col("sz").alias("sz_b"), "shingle")
-        common = (
-            a.join(b, "shingle")
-            .where((F.col("a") < F.col("b"))
-                   & (F.least("sz_a", "sz_b")
-                      >= F.greatest("sz_a", "sz_b")
-                      * F.lit(threshold - 1e-6)))
-            .groupBy("a", "b", "sz_a", "sz_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
+        common = pair_instances(sh).groupBy("a", "b", "sz_a", "sz_b").agg(
+            F.count(F.lit(1)).alias("common"))
     else:
-        posting = F.sort_array(F.collect_list(F.struct("doc_id", "sz")))
-        _pair_expand = (
-            "flatten(transform(ds, (x, i) ->"
-            " transform(slice(ds, i + 2, size(ds) - i - 1),"
-            " y -> struct(x.doc_id AS a, y.doc_id AS b,"
-            " x.sz AS sz_a, y.sz AS sz_b))))"
-        )
-        # candidates from sub-cap shingles only (bounds the inverted-index
-        # fanout; the posting-list array is bounded by max_df by
-        # construction), then the EXACT intersection recomputed over full
-        # sets for just those pairs
-        cand = (
-            sh.groupBy("shingle").agg(posting.alias("ds"))
-            .where((F.size("ds") > 1) & (F.size("ds") <= max_df))
-            .select(F.explode(F.expr(_pair_expand)).alias("p"))
-            .select("p.a", "p.b", "p.sz_a", "p.sz_b")
-            .distinct()
-        )
+        # candidates from sub-cap shingles only: document frequency is
+        # counted FIRST (a map-side-combined count, one row per shingle),
+        # so no shingle's posting list is ever materialized and a
+        # heavy-hitter shingle costs one counter, not a df-sized array;
+        # the semi-join keeps each surviving shingle's fanout <= max_df.
+        # Then the EXACT intersection is recomputed over the full sets for
+        # just those pairs.
+        sub_cap = (sh.groupBy("shingle").count()
+                   .where((F.col("count") > 1) & (F.col("count") <= max_df))
+                   .select("shingle"))
+        cand = (pair_instances(sh.join(sub_cap, "shingle", "left_semi"))
+                .select("a", "b", "sz_a", "sz_b").distinct())
         a = sh.select(F.col("doc_id").alias("a"), "shingle")
         b = sh.select(F.col("doc_id").alias("b"), "shingle")
         common = (

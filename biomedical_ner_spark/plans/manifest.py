@@ -2,10 +2,14 @@
 (north rule; SURVEY.md §4.3.5).
 
 Schema: (run_id, stage, bucket, rows_in, rows_out, sha_ok, ts).
-A bucket is *done* for a stage iff a manifest row exists; restart
-anti-joins pending = all-buckets minus done (J10) and reprocesses only
-those, with bucket-level dynamic-partition-overwrite making the data
-writes idempotent.
+A bucket is *done* for a stage iff a manifest row exists.  A run reads
+the done buckets of every stage once, up front (done_by_stage); each
+stage then reprocesses only pending = all-buckets minus done (J10), with
+bucket-level dynamic-partition-overwrite making the data writes
+idempotent.  rows_in/rows_out are the per-bucket row counts of the
+stage's input and written output; sha_ok is false when an output row
+carries a content_sha no input document has (or, for ``linked``, when
+the bucket lost or gained rows).
 """
 
 from __future__ import annotations
@@ -28,14 +32,14 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
-def done_buckets(spark: SparkSession, path: str, run_id: str,
-                 stage: str) -> set[int]:
-    m = read_manifest(spark, path)
-    rows = (
-        m.where((F.col("run_id") == run_id) & (F.col("stage") == stage))
-        .select("bucket").distinct().collect()
-    )
-    return {r.bucket for r in rows}
+def done_by_stage(spark: SparkSession, path: str,
+                  run_id: str) -> dict[str, set[int]]:
+    """stage -> buckets with a manifest row for ``run_id``, in one read."""
+    done: dict[str, set[int]] = {}
+    for r in (read_manifest(spark, path).where(F.col("run_id") == run_id)
+              .select("stage", "bucket").distinct().collect()):
+        done.setdefault(r.stage, set()).add(r.bucket)
+    return done
 
 
 def append_rows(spark: SparkSession, path: str, rows: list[tuple]) -> None:

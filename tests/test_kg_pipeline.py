@@ -1,7 +1,9 @@
 """End-to-end KG pipeline tests: sha invariant, manifest lineage, resume
 (SURVEY.md §5.2.5), and connected-components correctness vs union-find."""
 
+import os
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +12,9 @@ from biomedical_ner_spark.operators.canonicalize import connected_components
 from biomedical_ner_spark.plans import manifest as mf
 from biomedical_ner_spark.plans.kg_pipeline import prepare_input, run_kg_pipeline
 from biomedical_ner_spark.sources.repos import synthesize_repos
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = os.path.join(ROOT, "scripts")
 
 
 @pytest.fixture(scope="module")
@@ -135,8 +140,6 @@ def test_pipeline_resume_overwrites_partial_bucket_writes(
     manifest, must be replaced wholesale on resume (dynamic partition
     overwrite is per-bucket idempotent) and the final tables must equal a
     clean run's."""
-    import os
-
     out_full = str(tmp_path_factory.mktemp("kg_full2"))
     run_kg_pipeline(spark, repos, out_full, run_id="r", n_buckets=4)
 
@@ -185,7 +188,7 @@ def test_py_files_packaging_and_spark_submit(tmp_path):
     import sys
     import zipfile
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from package_pyfiles import build
 
     zp = str(tmp_path / "bns.zip")
@@ -209,7 +212,7 @@ def test_py_files_packaging_and_spark_submit(tmp_path):
         ["spark-submit", "--master", "local[2]",
          "--conf", "spark.sql.shuffle.partitions=4",
          "--conf", "spark.ui.enabled=false",
-         "--py-files", zp, "/root/repo/scripts/kg_job.py",
+         "--py-files", zp, os.path.join(SCRIPTS, "kg_job.py"),
          "--input", "synth:60", "--output", str(tmp_path / "kg_out"),
          "--buckets", "2"],
         capture_output=True, text=True, timeout=420, cwd=str(tmp_path))
@@ -224,11 +227,9 @@ def test_arrow_query_from_outside_checkout(tmp_path):
     """A driver started outside the checkout (cwd elsewhere, no
     PYTHONPATH) must still run Arrow UDFs: get_spark hands the package
     path to the Python workers, which would otherwise fail to import it."""
-    import os
     import subprocess
     import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import sys; sys.path.insert(0, sys.argv[1])\n"
         "from biomedical_ner_spark.operators.spans import"
@@ -243,7 +244,7 @@ def test_arrow_query_from_outside_checkout(tmp_path):
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEM"] = "1g"
-    out = subprocess.run([sys.executable, "-c", code, root],
+    out = subprocess.run([sys.executable, "-c", code, ROOT],
                          capture_output=True, text=True, timeout=300,
                          cwd=str(tmp_path), env=env)
     assert out.returncode == 0, out.stderr[-3000:]
@@ -386,3 +387,109 @@ def test_files_per_bucket_sharding_identical_output(spark, repos,
                          files_per_bucket="auto")
     assert s1["stages"]["relations"] == \
         spark.read.parquet(f"{out1}/relations").count()
+
+
+def _failed_cells(spark, out):
+    return {(r.stage, r.bucket) for r in
+            mf.read_manifest(spark, f"{out}/manifest")
+            .where(~F.col("sha_ok")).collect()}
+
+
+def test_sha_check_flags_only_the_bucket_with_a_foreign_sha(
+        spark, repos, tmp_path_factory, monkeypatch):
+    """An extractor that stamps a content_sha no input document has onto
+    bucket 2's mentions must fail exactly bucket 2's mentions manifest
+    row; every other bucket stays sha_ok.  (Later stages inherit the
+    foreign sha, so they may flag bucket 2 too, but no other bucket.)"""
+    from biomedical_ner_spark.operators import spans
+
+    real = spans.extract_mentions_arrow
+
+    def foreign_sha_in_bucket_2(*args, **kwargs):
+        m = real(*args, **kwargs)
+        return m.withColumn("content_sha", F.when(
+            F.col("bucket") == 2, F.lit("f" * 64)
+        ).otherwise(F.col("content_sha")))
+
+    monkeypatch.setattr(spans, "extract_mentions_arrow",
+                        foreign_sha_in_bucket_2)
+    out = str(tmp_path_factory.mktemp("kg_foreign_sha"))
+    run_kg_pipeline(spark, repos, out, run_id="bad", n_buckets=4)
+    bad = _failed_cells(spark, out)
+    assert {b for s, b in bad if s == "mentions"} == {2}, bad
+    assert {b for _, b in bad} == {2}, bad
+
+
+def test_linked_check_flags_only_the_bucket_that_lost_a_row(
+        spark, repos, tmp_path_factory, monkeypatch):
+    """A linker that drops one mention of bucket 1 must fail exactly
+    bucket 1's linked manifest row (rows_in != rows_out); nothing else
+    fails."""
+    from biomedical_ner_spark.plans import kg_pipeline
+
+    real = kg_pipeline.link_mentions
+
+    def drop_one_in_bucket_1(part, spark, **kwargs):
+        linked = real(part, spark, **kwargs)
+        victim = (linked.where(F.col("bucket") == 1)
+                  .agg(F.min(F.struct("doc_id", "start_position")))
+                  .first()[0])
+        return linked.where(~((F.col("doc_id") == victim.doc_id)
+                              & (F.col("start_position")
+                                 == victim.start_position)))
+
+    monkeypatch.setattr(kg_pipeline, "link_mentions", drop_one_in_bucket_1)
+    out = str(tmp_path_factory.mktemp("kg_dropped_row"))
+    run_kg_pipeline(spark, repos, out, run_id="bad", n_buckets=4)
+    assert _failed_cells(spark, out) == {("linked", 1)}
+    man = mf.read_manifest(spark, f"{out}/manifest").where(
+        (F.col("stage") == "linked") & (F.col("bucket") == 1)).first()
+    assert man.rows_out == man.rows_in - 1
+
+
+def test_manifest_counters_equal_table_bucket_counts(
+        spark, repos, tmp_path_factory):
+    """Every manifest rows_in / rows_out equals a groupBy(bucket).count()
+    of the stage's input and written output — on a build, and on a
+    resume after a crash lost buckets {0, 2} (their manifest rows and
+    partition directories)."""
+    n = 4
+
+    def bucket_counts(df):
+        c = {r.bucket: r["count"] for r in df.groupBy("bucket").count()
+             .collect()}
+        return {b: c.get(b, 0) for b in range(n)}
+
+    def check(out):
+        src = prepare_input(repos, n)
+        tables = {t: spark.read.parquet(f"{out}/{t}")
+                  for t in ("mentions", "linked", "relations")}
+        want = {}
+        for stage, inp, outp in (
+                ("mentions", src, tables["mentions"]),
+                ("linked", tables["mentions"], tables["linked"]),
+                ("graph", tables["linked"], tables["relations"])):
+            ins, outs = bucket_counts(inp), bucket_counts(outp)
+            want |= {(stage, b): (ins[b], outs[b]) for b in range(n)}
+        got = {(r.stage, r.bucket): (r.rows_in, r.rows_out) for r in
+               mf.read_manifest(spark, f"{out}/manifest").collect()}
+        assert got == want
+
+    built = str(tmp_path_factory.mktemp("kg_counts_build"))
+    run_kg_pipeline(spark, repos, built, run_id="c", n_buckets=n)
+    check(built)
+
+    lost = [0, 2]
+    resumed = str(tmp_path_factory.mktemp("kg_counts_resume"))
+    shutil.rmtree(resumed)
+    shutil.copytree(built, resumed,
+                    ignore=shutil.ignore_patterns("manifest"))
+    (mf.read_manifest(spark, f"{built}/manifest")
+     .where(~F.col("bucket").isin(lost))
+     .write.parquet(f"{resumed}/manifest"))
+    for table in ("mentions", "linked", "relations"):
+        for b in lost:
+            shutil.rmtree(f"{resumed}/{table}/bucket={b}",
+                          ignore_errors=True)
+    run_kg_pipeline(spark, repos, resumed, run_id="c", n_buckets=n)
+    check(resumed)

@@ -3,6 +3,7 @@ synthesized repo corpus (north rule: P/R >= 0.95; we assert 1.0 on the
 deterministic stages and persist PARITY.json for the record)."""
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -79,7 +80,8 @@ def test_span_and_triple_pr_vs_oracle(spark, tmp_path):
         "triple_precision": tp_, "triple_recall": tr,
         "target": 0.95,
     }
-    with open("/root/repo/PARITY.json", "w") as f:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "PARITY.json"), "w") as f:
         json.dump(parity, f, indent=2)
     assert sp == 1.0 and sr == 1.0, parity
     assert tp_ == 1.0 and tr == 1.0, parity

@@ -50,9 +50,11 @@ def test_corpus_stats_from_docs_drops_zero_token_docs_like_explode(spark):
     assert rows == {"en": 1, "de": 1}
 
 
-def _ngram_pairs_bruteforce(rows, threshold):
+def _ngram_pairs_bruteforce(rows, threshold, max_df=None):
     """Literal Python set computation of ngram_jaccard_pairs (n=3,
-    jaccard rounded to 6 dp before the threshold test)."""
+    jaccard rounded to 6 dp before the threshold test).  With ``max_df``,
+    only pairs sharing at least one shingle of document frequency
+    <= max_df are candidates; they are still scored on the full sets."""
     import re
 
     pat = re.compile(r"[A-Za-z0-9_]+(?:-[A-Za-z0-9_]+)*|[^A-Za-z0-9_ \t\n\r]")
@@ -62,12 +64,18 @@ def _ngram_pairs_bruteforce(rows, threshold):
         if len(toks) >= 3:
             sets[r.doc_id] = {
                 " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    df = {}
+    for shs in sets.values():
+        for s in shs:
+            df[s] = df.get(s, 0) + 1
     expect = set()
     ids = sorted(sets)
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
-            inter = len(sets[a] & sets[b])
-            if inter == 0:
+            shared = sets[a] & sets[b]
+            inter = len(shared)
+            if inter == 0 or (max_df is not None
+                              and all(df[s] > max_df for s in shared)):
                 continue
             j = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
             if j >= threshold:
@@ -104,6 +112,41 @@ def test_ngram_size_ratio_prefilter_keeps_rounded_threshold_pairs(spark):
     got = {(r.a, r.b, r.jaccard) for r in
            dedup.ngram_jaccard_pairs(docs, threshold=t).collect()}
     assert got == expect == {(1, 2, 0.666667)}
+
+
+def test_ngram_max_df_plan_builds_no_posting_list(spark, docs_small):
+    """max_df must bound task memory: document frequency is counted before
+    any per-shingle grouping, so the plan holds no collect_list posting
+    array (which would be built in full before a size filter)."""
+    from biomedical_ner_spark.operators import dedup
+
+    q = dedup.ngram_jaccard_pairs(docs_small, threshold=0.5, max_df=5)
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_list" not in plan, plan
+
+
+def test_ngram_max_df_heavy_hitter_matches_bruteforce(spark):
+    """Four shingles in EVERY document (df = 8 > max_df = 3) generate no
+    candidates; pairs sharing a sub-cap shingle survive with exact
+    full-set scores (the heavy hitters still count in |A∩B|)."""
+    from biomedical_ner_spark.operators import dedup
+
+    tails = ["alpha beta gamma delta", "alpha beta gamma epsilon",
+             "zeta eta theta iota", "zeta eta theta kappa",
+             "lambda mu nu xi", "omicron pi rho sigma",
+             "alpha beta gamma delta tau", "upsilon phi chi psi"]
+    docs = spark.createDataFrame(
+        [(i, "heavy hitter shingle in every doc " + t) for i, t in enumerate(tails)],
+        "doc_id BIGINT, text STRING")
+    t, cap = 0.3, 3
+    expect = _ngram_pairs_bruteforce(docs.collect(), t, max_df=cap)
+    got = {(r.a, r.b, r.jaccard) for r in
+           dedup.ngram_jaccard_pairs(docs, threshold=t, max_df=cap).collect()}
+    assert got == expect
+    # the cap changed the answer: pairs sharing ONLY the heavy hitters
+    # (jaccard 4/12) pass the threshold uncapped but are not candidates
+    assert expect < _ngram_pairs_bruteforce(docs.collect(), t)
+    assert {(a, b) for a, b, _ in expect} == {(0, 1), (0, 6), (1, 6), (2, 3)}
 
 
 def test_curate_documents_chained_minby_matches_join_form(spark):
