@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .stats import collect_if_small
+
 # ---------------------------------------------------------------------------
 # Salted two-phase aggregation (SURVEY.md §4.3.2)
 # ---------------------------------------------------------------------------
@@ -64,15 +66,6 @@ def _canonical_edges(df: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-# below this many distinct edges the alias graph is collected and solved
-# with driver union-find: the graph is ONTOLOGY-bounded (distinct CUIs),
-# not corpus-bounded, so even web corpora usually stay under it — and each
-# distributed star round costs two shuffles + a checkpoint + an action of
-# fixed overhead, which dominates end-to-end wall on small graphs
-# (measured: 6.4 s of CC rounds for an 11-component graph).
-CC_DRIVER_MAX_EDGES = 500_000
-
-
 def _driver_union_find(rows, template: DataFrame) -> DataFrame:
     """Exact same (node, component=min-id) semantics as the star loop,
     solved on the driver from already-collected edge Rows.  ``template``
@@ -111,27 +104,26 @@ def connected_components(
     spark: SparkSession,
     checkpoint_dir: str | None = None,
     max_iter: int = 25,
-    driver_max_edges: int | None = CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """(node, component) where component = min node id in the component.
 
-    Size-gated: edge sets under ``driver_max_edges`` are solved with
-    driver union-find (identical min-label output, no per-round job
-    overhead); larger graphs run the alternating large-star/small-star
-    loop over string node ids.  Each distributed round is two
-    join+min-agg passes; lineage is truncated every round via parquet
-    checkpoint (resumable) or localCheckpoint.  Converges in O(log^2 n)
-    rounds; a round cap guards skewed alias graphs (SURVEY.md §7 risks).
-    Pass driver_max_edges=0/None to force the distributed loop.
+    Size-gated: edge sets within the shared driver gate
+    (``stats.collect_if_small``) are solved with driver union-find
+    (identical min-label output, no per-round job overhead); larger
+    graphs run the alternating large-star/small-star loop over string
+    node ids.  Each distributed round is two join+min-agg passes;
+    lineage is truncated every round via parquet checkpoint (resumable)
+    or localCheckpoint.  Converges in O(log^2 n) rounds; a round cap
+    guards skewed alias graphs (SURVEY.md §7 risks).
     """
     e = _canonical_edges(edges, "src", "dst")
-    if driver_max_edges:
-        # ONE capped job decides the gate AND feeds union-find (a separate
-        # count would execute the whole edge lineage twice); only the
-        # over-threshold case falls through and re-plans distributed
-        rows = e.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
-            return _driver_union_find(rows, e)
+    # the alias graph is ONTOLOGY-bounded (distinct CUIs), not
+    # corpus-bounded, so it usually fits the gate; each distributed star
+    # round costs two shuffles + a checkpoint + an action of fixed
+    # overhead (measured: 6.4 s of rounds for an 11-component graph)
+    rows = collect_if_small(e)
+    if rows is not None:
+        return _driver_union_find(rows, e)
 
     def _large_star(ed: DataFrame) -> DataFrame:
         # for each node, connect every strictly-larger neighbor to the

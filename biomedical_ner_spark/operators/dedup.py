@@ -203,7 +203,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
     # groupBy(shingle) + in-bucket combination expand: the pair stream
     # here is ~50x the shingle stream (sum of df^2/2; 127M at sf1.0) and
     # the expand's nested-transform lambdas are interpreted per pair
-    # struct — measured same-session r06 A/B (scripts/ab_ngram.py):
+    # struct — measured same-session r06 A/B (OPTIMIZATION_r06.md):
     # group-expand 36.5 s vs self-join-with-sizes 24.1 s vs r5
     # 4-evaluation shape 25.8 s.  The size-ratio prefilter is EXACT:
     # jaccard <= min(sz)/max(sz), so pairs with min < t*max can never pass

@@ -62,19 +62,6 @@ def alias_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def _tfidf_cosine(a: str, b: str, idf: dict[str, float]) -> float:
-    wa: dict[str, float] = {}
-    for g in _char_ngrams(a):
-        wa[g] = wa.get(g, 0.0) + idf.get(g, 1.0)
-    wb: dict[str, float] = {}
-    for g in _char_ngrams(b):
-        wb[g] = wb.get(g, 0.0) + idf.get(g, 1.0)
-    dot = sum(w * wb.get(g, 0.0) for g, w in wa.items())
-    na = math.sqrt(sum(w * w for w in wa.values()))
-    nb = math.sqrt(sum(w * w for w in wb.values()))
-    return dot / (na * nb + 1e-12)
-
-
 def link_artifacts() -> tuple[list[tuple], dict[str, float]]:
     """(alias_rows, idf) — the deterministic dictionary artifacts shared by
     the Spark scorer and the DuckDB kg_linked oracle builder (queries.py),

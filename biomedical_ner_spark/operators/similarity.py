@@ -7,10 +7,7 @@ candidate pairs share a bucket in >=1 table, cutting the pair space from
 O(n^2) to sum of per-bucket squares.
 
 Hot-path arithmetic is BATCHED NUMPY inside Arrow-fed stages (mapInPandas /
-pandas_udf): one matrix multiply per Arrow batch. The zip_with/aggregate
-higher-order-function forms are kept only as oracle-expressible JVM twins —
-HOFs are CodegenFallback-interpreted (~7 ms per 100-element fold measured on
-this host) and must never sit on a per-row hot path.
+pandas_udf): one matrix multiply per Arrow batch.
 
 Scale design for brute_topk: the query side is bounded (n_queries) and is
 collected once to the driver, shipped to executors in the UDF closure; the
@@ -33,26 +30,6 @@ from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 EPS = 1e-12  # same epsilon as the SQL twin; vanishes at 6-dp rounding
-
-
-# --- oracle-expressible JVM twins (NOT for hot paths; see module doc) ------
-
-def dot_expr(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS DOUBLE) * y),"
-        f" cast(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def norm_expr(a: str) -> Column:
-    return F.expr(
-        f"sqrt(aggregate({a}, cast(0.0 AS DOUBLE),"
-        f" (acc, v) -> acc + cast(v AS DOUBLE) * v))"
-    )
-
-
-def cosine_expr(a: str, b: str) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b) + F.lit(EPS))
 
 
 # --- batched numpy hot path -------------------------------------------------

@@ -16,8 +16,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(
     app_name: str = "biomedical_ner_spark",
@@ -77,7 +75,3 @@ def get_spark(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

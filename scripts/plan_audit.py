@@ -12,7 +12,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = os.environ.get("CHECK_SF", "/root/testdata/sf0.01")
 
@@ -173,7 +174,7 @@ def main() -> None:
         "",
     ]
     out = "\n".join(lines)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out)
     print(out)
     spark.stop()

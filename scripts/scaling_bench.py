@@ -32,7 +32,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPL_FACTOR = int(os.environ.get("SCALING_REPL", "64"))
@@ -65,7 +66,7 @@ def measure(cpus: int) -> dict:
     # tested parallelism, sized so each Arrow task carries >= ~0.5 s of
     # work (see module doc: per-task setup is ~50 ms on this host).  Note
     # the 256-part default of the JVM window+persist job shape (see
-    # scale_probe.py) does NOT transfer here: the mapInPandas stage has no
+    # bench.py) does NOT transfer here: the mapInPandas stage has no
     # per-doc window state, and oversplitting it pays 4x the task setup.
     parts = int(os.environ.get("SCALING_PARTS", "64"))
     spark = get_spark(
@@ -221,7 +222,7 @@ def main() -> None:
             out = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--cpus",
                  str(cpus)],
-                capture_output=True, text=True, cwd="/root/repo",
+                capture_output=True, text=True, cwd=ROOT,
             )
             line = [ln for ln in out.stdout.splitlines()
                     if ln.startswith("RESULT ")]
@@ -268,7 +269,7 @@ def main() -> None:
         )
     print(json.dumps(summary, indent=2))
     out_path = os.environ.get(
-        "SCALING_OUT", "/root/repo/BENCH_SCALING.json"
+        "SCALING_OUT", os.path.join(ROOT, "BENCH_SCALING.json")
     )
     with open(out_path, "w") as f:
         json.dump(summary, f, indent=2)

@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from biomedical_ner_spark.operators import stats
 from biomedical_ner_spark.operators.canonicalize import connected_components
 from biomedical_ner_spark.plans import manifest as mf
 from biomedical_ner_spark.plans.kg_pipeline import prepare_input, run_kg_pipeline
@@ -91,7 +92,7 @@ def test_pipeline_resume_produces_identical_output(spark, repos,
     assert dup.count() == 0
 
 
-def test_connected_components_vs_union_find(spark):
+def test_connected_components_vs_union_find(spark, monkeypatch):
     rng = random.Random(7)
     nodes = [f"n{i}" for i in range(60)]
     edges = set()
@@ -125,12 +126,13 @@ def test_connected_components_vs_union_find(spark):
     touched = {n for e in edges for n in e}
     # both physical forms must match the oracle: the size-gated driver
     # union-find (default for small graphs) AND the distributed star loop
-    for kw in ({}, {"driver_max_edges": 0}):
-        comp = connected_components(edf, spark, **kw)
+    for gate in (stats.DRIVER_COLLECT_MAX, 0):
+        monkeypatch.setattr(stats, "DRIVER_COLLECT_MAX", gate)
+        comp = connected_components(edf, spark)
         got = {r.node: r.component for r in comp.collect()}
-        assert set(got) == touched, kw
+        assert set(got) == touched, gate
         for n in touched:
-            assert got[n] == want_label[n], (n, kw)
+            assert got[n] == want_label[n], (n, gate)
 
 
 def test_pipeline_resume_overwrites_partial_bucket_writes(
